@@ -13,6 +13,13 @@ deterministic test/verification mode. Two sinks:
   per-batch work is one broadcast-sized anti-join (update mode emits only
   changed keys) plus a rewrite of the target, exactly the copy-on-write
   MERGE cost profile.
+
+Per-batch cost of the upsert sink: ONE run of the upstream (stateful)
+plan, whose output is cached for the batch, then an anti-join + union
+over that cache and the rewrite of the target. A cache block lost to
+eviction or an executor failure only costs a recompute of its partition,
+and that recompute is idempotent: the state store reloads version N-1
+and re-commits the same version N.
 """
 
 from __future__ import annotations
@@ -81,6 +88,15 @@ def run_upsert_table(
     key per batch, so the anti-join's build side stays small regardless of
     total state size — the same cost shape as a Delta/Iceberg MERGE, with
     no per-batch ``collect()`` to the driver.
+
+    Each micro-batch runs the upstream plan exactly once. Batch 0 writes
+    ``batch_df`` directly; later batches persist it for the duration of
+    the merge, so the anti-join keys and the union read the cached rows
+    instead of re-running the stateful handler, its Arrow exchange and a
+    state-store reload + commit a second time. The merged write fills the
+    cache (no separate ``count()`` job) and the cache is dropped in a
+    ``finally``, so a failed write leaks no blocks. A lost cached block is
+    an idempotent recompute (see the module docstring).
     """
     spark = sdf.sparkSession
     # roots nest under the pid-scoped scratch dir: the version dirs are
@@ -95,19 +111,24 @@ def run_upsert_table(
     latest: dict[str, str | None] = {"path": None}
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
         prev = latest["path"]
-        merged = batch_df
-        if prev is not None:
-            cur = sess.read.parquet(prev)
+        new_path = os.path.join(root, f"v{batch_id}")
+        if prev is None:  # first version: batch_df has a single consumer
+            batch_df.write.mode("overwrite").parquet(new_path)
+            latest["path"] = new_path
+            return
+        # two consumers below: uncached, each would re-run the stateful plan
+        batch_df.persist()
+        try:
+            cur = batch_df.sparkSession.read.parquet(prev)
             merged = cur.join(
                 batch_df.select(*key_cols), key_cols, "left_anti"
             ).unionByName(batch_df)
-        new_path = os.path.join(root, f"v{batch_id}")
-        merged.write.mode("overwrite").parquet(new_path)
+            merged.write.mode("overwrite").parquet(new_path)
+        finally:
+            batch_df.unpersist()
         latest["path"] = new_path
-        if prev is not None:
-            shutil.rmtree(prev, ignore_errors=True)
+        shutil.rmtree(prev, ignore_errors=True)
 
     q = (
         sdf.writeStream.foreachBatch(upsert)

@@ -97,15 +97,18 @@ def compare_query(spark, sf_dir: str, name: str) -> None:
 
     spec = registry.get(name)
     assert spec.oracle is not None, f"{name} has no oracle"
+    compare_frame(spec.fn(spark, sf_dir), sf_dir, spec.oracle, name)
 
-    sdf = spec.fn(spark, sf_dir)
+
+def compare_frame(sdf, sf_dir: str, oracle: str, name: str) -> None:
+    """Assert a Spark DataFrame matches a DuckDB oracle query."""
     spark_cols = sorted(sdf.columns)
     spark_rows = [
         tuple(_norm(row[c]) for c in spark_cols) for row in sdf.collect()
     ]
 
     con = duckdb_connect(sf_dir)
-    cur = con.execute(spec.oracle)
+    cur = con.execute(oracle)
     duck_cols_raw = [d[0] for d in cur.description]
     duck_rows_raw = cur.fetchall()
     order = sorted(range(len(duck_cols_raw)), key=lambda i: duck_cols_raw[i])

@@ -162,3 +162,59 @@ def test_state_parts_env_overrides_call_site_pin(spark, monkeypatch):
     with _streaming_session(spark, state_parts=4):
         assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+
+
+def test_upsert_runs_stateful_handler_once_per_key_per_batch(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The upsert MERGE reads each micro-batch twice (anti-join keys +
+    union); it must not re-run the stateful plan for the second read. The
+    handler runs in Python workers, so each call appends a line to a file:
+    over a 3-batch stream the call count must equal the sum of distinct
+    keys per batch, and the table must still match the batch oracle."""
+    import os
+
+    from spark_state_provider_spark.operators.streaming_queries import (
+        _streaming_session,
+    )
+    from spark_state_provider_spark.streaming import stateful
+    from spark_state_provider_spark.streaming.harness import run_upsert_table
+    from spark_state_provider_spark.streaming.sources import split_events_dir
+
+    from tests.oracle import compare_frame
+
+    n_batches = 3
+    calls_log = str(tmp_path / "handler_calls.log")
+    fold = stateful.user_statistics_handler
+
+    def counting_handler(key, pdfs, state):
+        with open(calls_log, "a") as f:
+            f.write(f"{key[0]}\n")
+        yield from fold(key, pdfs, state)
+
+    monkeypatch.setattr(stateful, "user_statistics_handler", counting_handler)
+    with _streaming_session(spark):
+        ev = stream_events(spark, sf_dir, n_batches)
+        table = run_upsert_table(
+            stateful.user_statistics_stream(ev), ["user_id"]
+        )
+
+    slices_dir = split_events_dir(spark, sf_dir, n_batches)
+    slices = sorted(d for d in os.listdir(slices_dir) if d.startswith("slice="))
+    assert len(slices) == n_batches  # one file per trigger → one batch each
+    expected_calls = sum(
+        spark.read.parquet(os.path.join(slices_dir, d))
+        .select("user_id")
+        .distinct()
+        .count()
+        for d in slices
+    )
+    with open(calls_log) as f:
+        n_calls = sum(1 for _ in f)
+    assert n_calls == expected_calls
+    compare_frame(
+        table,
+        sf_dir,
+        registry.get("q24s_stream_user_stats").oracle,
+        "upsert_once_per_batch",
+    )
